@@ -15,11 +15,17 @@ Scale shape: one window over (extracted_sha256) on a column-pruned read of
 the decisions store (hash + keys + decision columns; scrubbed_text rides
 only through the final projection), one day-partitioned write.  No joins,
 no driver-side loops.
+
+The online variant (``demote_against_history``, run inside a state tick)
+reduces the history to a fixed-size bitmap plus a semi-join filter that
+yields a tick-sized confirmed-hash set, and the increment passes through
+one left join against that set.  It reads the increment twice, so the
+caller persists it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -96,6 +102,15 @@ def compact_decisions(spark: SparkSession, decisions_path: str,
 # online cross-increment dedup (bitmap-prefiltered history check)
 # ---------------------------------------------------------------------------
 
+def _bitmap_slot(col: str, bits: int) -> list[Column]:
+    """[word_idx, _bit]: the bitmap word of ``xxhash64(col) mod bits`` and
+    its one-bit mask — the layout membership_bitmap packs and
+    demote_against_history probes."""
+    bkt = f"pmod(xxhash64(`{col}`), {bits})"
+    return [F.expr(f"floor({bkt} / 64)").alias("word_idx"),
+            F.expr(f"shiftleft(1L, CAST({bkt} % 64 AS INT))").alias("_bit")]
+
+
 def membership_bitmap(df: DataFrame, col: str,
                       bits: int = 1 << 22) -> DataFrame:
     """Fixed-size membership bitmap of ``xxhash64(col) mod bits`` packed as
@@ -105,14 +120,9 @@ def membership_bitmap(df: DataFrame, col: str,
     positives (~n_distinct/bits) cost only exact-join work downstream.
     Generalizes the decontamination prefilter (operators/decontam.py::
     bench_gram_bitmap) from gram longs to any column."""
-    bkt = F.pmod(F.xxhash64(F.col(col)), F.lit(bits))
     return (
         df.filter(F.col(col).isNotNull())
-        .select(bkt.alias("_bkt"))
-        .select(
-            F.floor(F.col("_bkt") / 64).alias("word_idx"),
-            F.expr("shiftleft(1L, CAST(_bkt % 64 AS INT))").alias("_bit"),
-        )
+        .select(*_bitmap_slot(col, bits))
         .groupBy("word_idx")
         .agg(F.bit_or("_bit").alias("word"))
     )
@@ -129,52 +139,54 @@ def demote_against_history(increment: DataFrame, history: DataFrame,
     exact-dedup stage's job).
 
     Scale shape: the history is reduced to a FIXED-SIZE bitmap in one
-    column-pruned pass (no history shuffle); increment rows that miss the
-    bitmap are provably new and never join.  Only bitmap *candidates*
-    (true dups + ~n_history/bits false positives) reach the exact
-    confirmation semi-join, whose increment side is tick-sized — AQE
-    broadcasts it, so the history side is filtered map-side too.  Same
-    demotion contract as demote_cross_increment_duplicates: rules +=
-    exact_duplicate, keep flips, scrubbed_text nulls; non-contested rows
-    pass through untouched."""
+    column-pruned pass (no history shuffle); only the bitmap is forced to
+    broadcast, since only it is bounded by construction.  Only the slim hash
+    projection of the contested increment rows probes it; the bitmap hits
+    (true dups + ~n_history/bits false positives) semi-join a second
+    column-pruned history scan, giving an at most tick-sized confirmed-hash
+    set.  The increment then passes through ONE left join against that set
+    — an existence join, which only adds a hit flag and so needs no
+    distinct — and the demotion columns are rewritten under the flag.  The
+    hits and the confirmed set are tick-sized, so the planner (and AQE at
+    run time) broadcasts them while a tick stays under
+    ``spark.sql.autoBroadcastJoinThreshold`` and history rows never
+    shuffle; a larger catch-up tick falls back to a shuffle join rather
+    than broadcasting an unbounded side.  Same demotion
+    contract as demote_cross_increment_duplicates: rules += exact_duplicate,
+    keep flips, scrubbed_text nulls; non-contested rows pass through
+    untouched, and the output keeps the increment's columns in order.
+
+    ``increment`` is read twice (the hash probe and the left join): the
+    caller persists it when it is expensive to recompute, as
+    process_increment does for the tick's decisions."""
     hist_kept = history.filter(
         F.coalesce(F.col("keep"), F.lit(False))
-        & F.col("extracted_sha256").isNotNull())
+        & F.col("extracted_sha256").isNotNull()).select("extracted_sha256")
     bitmap = membership_bitmap(hist_kept, "extracted_sha256", bits)
 
     contested = F.coalesce(
         F.col("keep") & F.col("extracted_sha256").isNotNull(), F.lit(False))
-    inc_c = increment.filter(contested)
-    h = F.pmod(F.xxhash64(F.col("extracted_sha256")), F.lit(bits))
-    probed = (
-        inc_c
-        .withColumn("_word_idx", F.floor(h / 64))
-        .withColumn("_bit", F.expr(
-            f"shiftleft(1L, CAST(pmod(xxhash64(extracted_sha256), {bits})"
-            " % 64 AS INT))"))
-        .join(F.broadcast(bitmap),
-              F.col("_word_idx") == F.col("word_idx"), "left")
-        .withColumn("_maybe_dup",
-                    F.coalesce(F.col("word").bitwiseAND(F.col("_bit")) != 0,
-                               F.lit(False)))
-        .drop("_word_idx", "_bit", "word_idx", "word")
+    hits = (
+        increment.filter(contested)
+        .select("extracted_sha256", *_bitmap_slot("extracted_sha256", bits))
+        .join(F.broadcast(bitmap), "word_idx")
+        .filter(F.col("word").bitwiseAND(F.col("_bit")) != 0)
+        .select("extracted_sha256")
     )
-    definitely_new = probed.filter(~F.col("_maybe_dup")).drop("_maybe_dup")
-    candidates = probed.filter(F.col("_maybe_dup")).drop("_maybe_dup")
-    confirmed = candidates.join(
-        hist_kept.select("extracted_sha256").distinct(),
-        on="extracted_sha256", how="left_semi")
-    survivors = candidates.join(
-        hist_kept.select("extracted_sha256").distinct(),
-        on="extracted_sha256", how="left_anti")
-    demoted = (
-        confirmed
-        .withColumn("rules", F.array_sort(F.array_union(
+    confirmed = hist_kept.join(hits, "extracted_sha256", "left_semi")
+    hit = F.col("_hit")
+    return (
+        # isin(subquery) plans as an existence join: a hash kept twice in
+        # the history cannot duplicate the increment row
+        increment.withColumn("_hit", contested & F.col("extracted_sha256")
+                             .isin(confirmed))
+        .withColumn("rules", F.when(hit, F.array_sort(F.array_union(
             F.col("rules"), F.array(F.lit("exact_duplicate")))))
-        .withColumn("keep", F.lit(False))
-        .withColumn("scrubbed_text", F.lit(None).cast("string"))
+            .otherwise(F.col("rules")))
+        .withColumn("scrubbed_text",
+                    F.when(hit, F.lit(None).cast("string"))
+                    .otherwise(F.col("scrubbed_text")))
+        .withColumn("keep", F.when(hit, F.lit(False))
+                    .otherwise(F.col("keep")))
+        .select(*increment.columns)
     )
-    return (increment.filter(~contested)
-            .unionByName(definitely_new)
-            .unionByName(survivors)
-            .unionByName(demoted))

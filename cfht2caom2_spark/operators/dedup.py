@@ -8,8 +8,12 @@ published MinHash/LSH banding construction (Broder 1997; Lee et al. 2022
 "Deduplicating Training Data Makes Language Models Better").
 
 Scale notes (the part that matters at 10^12 docs):
-  * signatures are computed JVM-side from md5-derived shingle hashes — one
-    narrow projection, no Python, no shuffle;
+  * on the product path (``build_pipeline`` with ``fused=True``) signatures
+    ride the fused Arrow extraction pass (functions/fused.py::minhash_sig_py,
+    crc32 shingle hashes) and ``minhash_losers_from_sig`` consumes them — no
+    extra Python crossing, no shuffle; the Column-expression signature
+    (``minhash_signature``) serves the unfused path and the exact-Jaccard
+    verifier (``minhash_dedup_losers``);
   * the ONLY wide op is the band-bucket self-join; band keys are high-entropy
     (md5-derived), so buckets are balanced by construction and AQE skew-join
     covers residual hot buckets (e.g. boilerplate-identical pages);

@@ -481,27 +481,30 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
     from pyspark.sql import Observation
 
     persisted: list = []
-    decisions = build_pipeline(work, spark, profile, dedupe=dedupe,
-                               persist_tracker=persisted,
-                               benchmark=benchmark,
-                               quality_weights=quality_weights,
-                               ppl_model=ppl_model)
-    decisions = decisions.withColumn(
-        "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
-    )
-    # free metrics riding the write action (A6) — no second pass over the data
-    obs = Observation("pipeline_metrics")
-    decisions = decisions.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
-    )
-    (decisions.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")  # scoped to THIS write
-     .partitionBy("p_day").parquet(decisions_path))
-    metrics = obs.get
-    for df_p in persisted:
-        df_p.unpersist()
+    try:
+        decisions = build_pipeline(work, spark, profile, dedupe=dedupe,
+                                   persist_tracker=persisted,
+                                   benchmark=benchmark,
+                                   quality_weights=quality_weights,
+                                   ppl_model=ppl_model)
+        decisions = decisions.withColumn(
+            "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
+        )
+        # free metrics riding the write action (A6) — no second pass over
+        # the data
+        obs = Observation("pipeline_metrics")
+        decisions = decisions.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
+        )
+        (decisions.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")  # scoped to THIS write
+         .partitionBy("p_day").parquet(decisions_path))
+        metrics = obs.get
+    finally:
+        for df_p in persisted:
+            df_p.unpersist()
 
     # read-back restricted to the days just written: p_day is the partition
     # column, so the isin filter partition-prunes at planning time and the

@@ -34,6 +34,28 @@ from ..sources.table import SnapshotTable
 
 # -- 1. snapshot-range micro-batches -----------------------------------------
 
+def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
+    """The accumulated decisions store — the two columns the demotion
+    reads, plus the since_snapshot/p_day partition columns — or None before
+    the first tick has written one.  Only a missing path means "no
+    history": any other read error (a corrupt or unreadable store) raises
+    rather than silently turning history dedup off."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        # explicit schema: no footer-reading schema-inference job per tick.
+        # since_snapshot is listed so it resolves even when the store holds
+        # no files yet (a first tick that died mid-write leaves an empty
+        # partition directory); it then reads null and filters to nothing.
+        return spark.read.schema(
+            "extracted_sha256 string, keep boolean, since_snapshot int") \
+            .parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 def read_bookmark(path: str) -> int | None:
     if not os.path.exists(path):
         return None
@@ -71,33 +93,42 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
     from pyspark.sql import Observation
 
     inc = table.incremental(spark, after=last, until=current)
-    persisted: list = []
-    decisions = build_pipeline(inc.drop("p_day"), spark, profile,
-                               dedupe=dedupe, persist_tracker=persisted)
-    if history_dedup:
-        # online cross-increment exact dedup: content already kept by a
-        # PRIOR tick demotes now instead of waiting for the offline
-        # compaction rewrite.  The accumulated store never shuffles — it
-        # reduces to a fixed-size membership bitmap; only bitmap candidates
-        # reach the exact confirmation join (operators/compact.py).
-        from ..operators.compact import demote_against_history
-
-        try:
-            history = spark.read.parquet(f"{out_dir}/decisions")
-        except Exception:
-            history = None     # first tick: nothing to dedup against
-        if history is not None:
-            decisions = demote_against_history(decisions, history)
-    # metrics ride the write action — one execution per tick, not two
-    obs = Observation("tick_metrics")
-    decisions = decisions.observe(obs, F.count(F.lit(1)).alias("n"))
     since = -1 if last is None else last
-    (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
-     .write.mode("overwrite").partitionBy("p_day")
-     .parquet(f"{out_dir}/decisions/since_snapshot={since}"))
-    n = obs.get["n"]
-    for df_p in persisted:
-        df_p.unpersist()
+    persisted: list = []
+    try:
+        decisions = build_pipeline(inc.drop("p_day"), spark, profile,
+                                   dedupe=dedupe, persist_tracker=persisted)
+        if history_dedup:
+            # online cross-increment exact dedup: content already kept by a
+            # PRIOR tick demotes now instead of waiting for the offline
+            # compaction rewrite.  The accumulated store never shuffles — it
+            # reduces to a fixed-size membership bitmap; only bitmap
+            # candidates reach the exact confirmation join
+            # (operators/compact.py).
+            from pyspark import StorageLevel
+
+            from ..operators.compact import demote_against_history
+
+            history = _read_history(spark, f"{out_dir}/decisions")
+            if history is not None:
+                # a replayed tick overwrites its own since_snapshot
+                # directory: those rows are its crashed attempt, not history
+                history = history.filter(F.col("since_snapshot") != since)
+                # the demotion reads the tick twice (hash probe + flag
+                # join): cache it so the fused Python pass runs once per row
+                decisions = decisions.persist(StorageLevel.MEMORY_AND_DISK)
+                persisted.append(decisions)
+                decisions = demote_against_history(decisions, history)
+        # metrics ride the write action — one execution per tick, not two
+        obs = Observation("tick_metrics")
+        decisions = decisions.observe(obs, F.count(F.lit(1)).alias("n"))
+        (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+         .write.mode("overwrite").partitionBy("p_day")
+         .parquet(f"{out_dir}/decisions/since_snapshot={since}"))
+        n = obs.get["n"]
+    finally:
+        for df_p in persisted:
+            df_p.unpersist()
     write_bookmark(bookmark_path, current)
     return {"processed": n, "snapshot": current}
 

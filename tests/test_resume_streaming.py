@@ -102,6 +102,32 @@ def test_state_tick_idempotent_on_crash_replay(spark, tmp_path):
     assert dec.count() == 120  # superset overwrite, not 80 + 120 appended
 
 
+def test_history_tick_crash_replay_ignores_own_output(spark, tmp_path):
+    """A replayed history tick must not dedup against the rows its crashed
+    attempt wrote to the directory it is about to overwrite: they are not
+    history, and demoting against them would drop every kept row."""
+    import os
+
+    table = SnapshotTable(f"{tmp_path}/pages")
+    table.append(synth_pages(spark, 60))
+    bm = str(tmp_path / "bm.json")
+    out = str(tmp_path / "out")
+    process_increment(spark, table, out, bm, history_dedup=True)
+    kept1 = spark.read.parquet(f"{out}/decisions").filter("keep").count()
+    assert kept1 > 0
+    # crash before the bookmark write, then new data arrives
+    os.remove(bm)
+    table.append(synth_pages(spark, 20, seed=7).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("interval 30 days")))
+    t2 = process_increment(spark, table, out, bm, history_dedup=True)
+    assert t2["processed"] == 80
+    dec = spark.read.parquet(f"{out}/decisions")
+    assert dec.count() == 80
+    assert dec.filter(
+        F.array_contains("rules", "exact_duplicate")).count() == 0
+    assert dec.filter("keep").count() >= kept1
+
+
 def test_cross_increment_compaction(spark, tmp_path):
     """State ticks run with dedupe off; byte-identical content arriving in
     two different increments must be demoted by the periodic compaction pass
@@ -503,6 +529,26 @@ def test_demote_against_history_bitmap_semantics(spark):
         assert (tiny[u]["keep"], tiny[u]["rules"]) == (
             out[u]["keep"], out[u]["rules"]), u
 
+    # edge cases: a NULL-keep row passes through unchanged, and two rows
+    # sharing one kept history hash are both demoted
+    inc2 = _mini_decisions(spark, [
+        ("https://j/1", 20, "sha_A", None),
+        ("https://j/2", 21, "sha_A", True),
+        ("https://j/3", 22, "sha_A", True),
+    ]).withColumn("scrubbed_text", F.concat(F.lit("text of "), "url"))
+    before = {r["url"]: r for r in inc2.collect()}
+    demoted = demote_against_history(inc2, hist)
+    assert demoted.columns == inc2.columns
+    out2 = {r["url"]: r for r in demoted.collect()}
+    assert out2["https://j/1"] == before["https://j/1"]
+    for u in ("https://j/2", "https://j/3"):
+        assert out2[u]["keep"] is False
+        assert out2[u]["rules"] == ["exact_duplicate"]
+        assert out2[u]["scrubbed_text"] is None
+    assert {r["url"]: r for r in
+            demote_against_history(inc2, hist, bits=64).collect()} == out2
+    assert tiny == out
+
 
 def test_state_tick_history_dedup(spark, tmp_path):
     """Two state ticks with --history-dedup: content re-arriving in tick 2
@@ -529,6 +575,124 @@ def test_state_tick_history_dedup(spark, tmp_path):
     # tick-1 partition untouched: no exact_duplicate rules there
     assert spark.read.parquet(f"{out}/decisions/since_snapshot=-1") \
         .filter(F.array_contains("rules", "exact_duplicate")).count() == 0
+
+
+def test_state_tick_history_runs_fused_pass_once(spark, tmp_path,
+                                                 monkeypatch):
+    """A tick with history runs the fused Python pass once per appended
+    row, like the first tick: the demotion reads the tick's decisions
+    twice, so process_increment persists them first."""
+    import cfht2caom2_spark.functions.fused as fused
+
+    rows = spark.sparkContext.accumulator(0)
+    real = fused.with_extract_and_scores
+
+    def counted(df, *args, **kwargs):
+        out = real(df, *args, **kwargs)
+
+        def tally(batches):
+            for b in batches:
+                rows.add(len(b))
+                yield b
+
+        return out.mapInPandas(tally, schema=out.schema)
+
+    monkeypatch.setattr(fused, "with_extract_and_scores", counted)
+    table = SnapshotTable(f"{tmp_path}/pages")
+    bm, out = str(tmp_path / "bm.json"), str(tmp_path / "out")
+    deltas = []
+    for k in range(2):
+        table.append(synth_pages(spark, 50).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr(f"interval {30 * k} days")))
+        before = rows.value
+        assert process_increment(spark, table, out, bm,
+                                 history_dedup=True)["processed"] == 50
+        deltas.append(rows.value - before)
+    assert deltas == [50, 50]
+    # tick 2 re-sent tick 1's pages: the demotion really ran
+    assert spark.read.parquet(f"{out}/decisions").filter(
+        F.array_contains("rules", "exact_duplicate")).count() > 0
+
+
+def test_state_tick_unreadable_history_raises(spark, tmp_path):
+    """Only a missing store means "first tick": an unreadable one raises
+    instead of silently turning history dedup off, and the bookmark does
+    not advance."""
+    table = SnapshotTable(f"{tmp_path}/pages")
+    table.append(synth_pages(spark, 20))
+    bm, out = str(tmp_path / "bm.json"), tmp_path / "out"
+    part = out / "decisions" / "since_snapshot=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer|read"):
+        process_increment(spark, table, str(out), bm, history_dedup=True)
+    assert read_bookmark(bm) is None
+
+
+@pytest.mark.parametrize("entry", ["run_batch", "history_tick"])
+def test_failed_write_unpersists(spark, tmp_path, monkeypatch, entry):
+    """A failed decisions write still unpersists every frame the run
+    cached, so a long-lived session does not leak them."""
+    from pyspark import StorageLevel
+
+    import cfht2caom2_spark.plans.pipeline as pipeline
+    import cfht2caom2_spark.streaming.incremental as incremental
+
+    table = SnapshotTable(f"{tmp_path}/pages")
+    sid = table.append(synth_pages(spark, 30))
+    bm, out = str(tmp_path / "bm.json"), str(tmp_path / "out")
+    if entry == "history_tick":
+        process_increment(spark, table, out, bm, history_dedup=True)
+        table.append(synth_pages(spark, 30).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr("interval 30 days")))
+    trackers = []
+    real = pipeline.build_pipeline
+
+    def failing(*args, **kwargs):
+        trackers.append(kwargs["persist_tracker"])
+        return real(*args, **kwargs).withColumn(
+            "_boom", F.raise_error(F.lit("injected write failure")))
+
+    monkeypatch.setattr(pipeline, "build_pipeline", failing)
+    monkeypatch.setattr(incremental, "build_pipeline", failing)
+    with pytest.raises(Exception, match="injected write failure"):
+        if entry == "run_batch":
+            run_batch(spark, table.read(spark, sid).drop("p_day"), out,
+                      snapshot_id=sid)
+        else:
+            process_increment(spark, table, out, bm, history_dedup=True)
+    persisted = [df for t in trackers for df in t]
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_history_tick_retries_after_failed_first_write(spark, tmp_path,
+                                                       monkeypatch):
+    """A first history tick that dies during its write leaves an empty
+    since_snapshot directory behind; the retry must treat it as an empty
+    history and write every row, not fail on every later attempt."""
+    import cfht2caom2_spark.streaming.incremental as incremental
+
+    table = SnapshotTable(f"{tmp_path}/pages")
+    table.append(synth_pages(spark, 40))
+    bm, out = str(tmp_path / "bm.json"), str(tmp_path / "out")
+    real = incremental.build_pipeline
+
+    def failing(*args, **kwargs):
+        return real(*args, **kwargs).withColumn(
+            "_boom", F.raise_error(F.lit("injected write failure")))
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "build_pipeline", failing)
+        with pytest.raises(Exception, match="injected write failure"):
+            process_increment(spark, table, out, bm, history_dedup=True)
+    assert read_bookmark(bm) is None
+    assert process_increment(spark, table, out, bm,
+                             history_dedup=True)["processed"] == 40
+    dec = spark.read.parquet(f"{out}/decisions")
+    assert dec.count() == 40
+    assert dec.filter(
+        F.array_contains("rules", "exact_duplicate")).count() == 0
 
 
 def test_pack_cli_lifecycle(spark, tmp_path, monkeypatch):
